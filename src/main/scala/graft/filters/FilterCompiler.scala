@@ -2,62 +2,104 @@ package graft.filters
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Compiles a [[FilterSpec]] into a Catalyst `Column` predicate tree.
   *
   * This is the Spark-native re-expression of the reference's query core,
   * `ApplyPayloadFilters` (`Decisions.Kinesis/KinesisThreadJobs.cs:731-814`).
   * Instead of a per-record interpreter loop, the spec compiles once into a
-  * declarative predicate that Catalyst pushes down to the scan and runs
-  * inside whole-stage codegen — at 100 TB the filter evaluates columnar,
-  * with no per-row JSON re-parse overhead beyond the extraction itself.
+  * declarative predicate that runs inside whole-stage codegen, with ONE
+  * full-body JSON parse per record ([[parse]]): a `from_json` whose schema
+  * is derived from the spec — a STRING field for each distinct first key
+  * of the filter properties, plus a corrupt-record field.
   *
   * Semantics reproduced deliberately (SURVEY §2.3):
-  *   - P4: JSON-path extraction via `get_json_object(col, "$." + property)`
-  *     — returns a string, matching `JObject.SelectToken(...).ToString()`
-  *     (`KinesisThreadJobs.cs:736,743`).
+  *   - P4: a property is a `SelectToken` path, `name([n])*` segments
+  *     joined by `.` (grammar checked by [[FilterValidation]]). Its first
+  *     key is read from the parse; the rest of the path (`.type`, `[0]`,
+  *     `[2].id`) is read by `get_json_object` from that key's sub-document
+  *     only. Either way the value is a string, matching
+  *     `JObject.SelectToken(...).ToString()` (`KinesisThreadJobs.cs:736,743`):
+  *     a STRING field holds a string value's text and any other value's
+  *     compact JSON, exactly what `get_json_object` returns.
   *   - P5/S1: ALL comparisons are string comparisons, even
   *     Greater/Less Than — `string.Compare(..., Ordinal)`
   *     (`KinesisThreadJobs.cs:778-801`): `"9" > "1000"` is TRUE.
   *     Spark's UTF8String binary ordering matches ordinal for ASCII.
-  *   - P6: AND = all match, OR = any matches; empty list ⇒ `!useOr`
-  *     (`KinesisThreadJobs.cs:807-813`).
+  *   - P6: AND = all match, OR = any matches; an empty list delivers
+  *     everything regardless of `useOr`, because the reference only calls
+  *     `ApplyPayloadFilters` when `PayloadFilters?.Length > 0`
+  *     (`KinesisThreadJobs.cs:694,807-813`).
   *   - P7: missing property ⇒ non-match for that filter (AND rejects the
-  *     record, OR skips the filter; `KinesisThreadJobs.cs:736-741`). Under
-  *     Spark 3-valued logic `null <op> x` is null ⇒ treated as non-match in
-  *     both branches, which is exactly the reference behavior; we still wrap
-  *     in `coalesce(pred, false)` so the composed column is a real boolean.
-  *   - P8: a record whose body fails to parse as JSON BYPASSES the filters
-  *     and is delivered (`KinesisThreadJobs.cs:694-714`, catch falls through
-  *     to dispatch). A naive `from_json(...).isNotNull` filter would drop it.
+  *     record, OR skips the filter; `KinesisThreadJobs.cs:736-741`). A path
+  *     that runs through a non-object (`event.type` where `event` is a
+  *     string, number or array) is missing too. Under Spark 3-valued logic
+  *     `null <op> x` is null; `coalesce(pred, false)` makes it a real false.
+  *   - P8: a body that is not a JSON object BYPASSES the filters and is
+  *     delivered (`KinesisThreadJobs.cs:694-714`: `JObject.Parse` throws,
+  *     the catch falls through to dispatch) — malformed text, a top-level
+  *     array, a bare scalar or string, `null`, a null body. Every declared
+  *     field is a STRING, so no value can mismatch its type: the corrupt
+  *     field is non-null exactly when the body is not an object, and a
+  *     JSON `null` or null body parses to a null struct. The parser options
+  *     are `get_json_object`'s: unquoted control characters are accepted,
+  *     `NaN` and leading-zero numbers are malformed.
   *   - P9: unknown verb ⇒ error at compile time
   *     (`KinesisThreadJobs.cs:802-804` logs + rejects per-record; we fail
   *     fast instead, which is strictly safer).
+  *
+  * Two documents read differently from a whole-body `get_json_object`:
+  * a duplicate TOP-LEVEL key resolves to its last value (`from_json`),
+  * not its first; and a string value whose text is itself a JSON object
+  * is traversed by a nested path (`event.type` on `{"event":"{\"type\":
+  * \"a\"}"}` reads `a`), since a STRING field holds the decoded text.
   */
 object FilterCompiler {
   import FilterVerbs._
 
-  /** True iff the column parses as a JSON OBJECT.
-    *
-    * `get_json_object(c, "$")` returns the (re-serialized) document for any
-    * valid JSON input and null for malformed input — a codegen'd validity
-    * probe with no UDF. The object-shape check matters for P8 parity: the
-    * reference parses with `JObject.Parse`, which throws on top-level
-    * arrays (`[1,2]`), bare scalars (`123`, `"x"`), and a bare `null` —
-    * all of those records are DELIVERED unfiltered. A plain validity probe
-    * would instead apply the filters to them and (under AND with a missing
-    * property) drop them, so the re-serialized document must also start
-    * with '{'. (A `null` body yields null from the probe, agreeing with
-    * the reference's throw-and-deliver for that case too.)
+  /** Parse field that is non-null exactly when the body is not a JSON
+    * object (see P8 above).
     */
-  def isValidJson(c: Column): Column = {
-    val doc = get_json_object(c, "$")
-    doc.isNotNull && doc.startsWith("{")
+  private val CorruptField = "_graft_corrupt"
+
+  private val ParseOptions = java.util.Map.of(
+    "columnNameOfCorruptRecord", CorruptField,
+    "allowUnquotedControlChars", "true",
+    "allowNonNumericNumbers", "false")
+
+  /** A property's first key and the rest of its path:
+    * `a.b[0]` → (`a`, `.b[0]`), `ids[0]` → (`ids`, `[0]`), `k` → (`k`, ``).
+    */
+  private def firstKey(property: String): (String, String) =
+    property.splitAt(property.indexWhere(c => c == '.' || c == '[') match {
+      case -1 => property.length
+      case i => i
+    })
+
+  /** The ONE parse of `body` for `spec`: a STRING field per distinct first
+    * key of the spec's properties and of `keep` (further properties the
+    * caller reads from the same parse with [[extract]]), plus
+    * [[CorruptField]].
+    */
+  def parse(body: Column, spec: FilterSpec, keep: String*): Column = {
+    FilterValidation.requireValid(spec)
+    val keys = (spec.filters.map(_.property) ++ keep).map(firstKey(_)._1)
+    from_json(body,
+      StructType((keys :+ CorruptField).distinct
+        .map(StructField(_, StringType))),
+      ParseOptions)
   }
 
-  /** P4: extract `property` (dot path, arbitrary depth) as a string. */
-  def extract(jsonCol: Column, property: String): Column =
-    get_json_object(jsonCol, "$." + property)
+  /** P4: `property` as a string, from a [[parse]] that declared its first
+    * key; `get_json_object` reads the rest of the path from that key's
+    * sub-document.
+    */
+  def extract(parsed: Column, property: String): Column = {
+    val (key, rest) = firstKey(property)
+    if (rest.isEmpty) parsed.getField(key)
+    else get_json_object(parsed.getField(key), "$" + rest)
+  }
 
   /** P5: one verb applied to an already-extracted string value. */
   def verbPredicate(extracted: Column, verb: String, value: String): Column = {
@@ -81,11 +123,6 @@ object FilterCompiler {
         throw new IllegalArgumentException(s"Unknown filter verb '$other'")
     }
   }
-
-  /** One filter compiled against the JSON body column; null-safe boolean. */
-  def filterPredicate(jsonCol: Column, f: PayloadFilter): Column =
-    coalesce(verbPredicate(extract(jsonCol, f.property), f.verb, f.value),
-      lit(false))
 
   /** EXTENSION — deliberately NOT reference behavior: numeric comparison
     * verbs. The reference compares everything as ordinal strings (finding
@@ -118,137 +155,34 @@ object FilterCompiler {
     }
   }
 
+  /** The delivery verdict of `spec` over a [[parse]] of the body — the
+    * form for callers that also [[extract]] from the same parse.
+    */
+  def verdict(spec: FilterSpec, parsed: Column): Column =
+    compose(spec, parsed, verbPredicate)
+
+  /** The delivery predicate of `spec` over the JSON `body` column. */
+  def compile(spec: FilterSpec, body: Column): Column =
+    verdict(spec, parse(body, spec))
+
+  /** Typed twin of [[compile]]: same parse and composition, numeric verbs. */
+  def compileTyped(spec: FilterSpec, body: Column): Column =
+    compose(spec, parse(body, spec), typedVerbPredicate)
+
   /** The delivery-critical P6/P7/P8 composition in ONE place: per-filter
-    * null ⇒ false (P7), AND/OR reduce (P6), object-only parse gate
-    * delivering non-objects unfiltered (P8), empty spec delivers all.
-    * [[compile]] and [[compileTyped]] differ only in the verb semantics
-    * they plug in — sharing this wrapper keeps the two from drifting.
+    * null ⇒ false (P7), AND/OR reduce (P6), non-objects delivered
+    * unfiltered (P8), an empty spec delivers all.
     */
-  private def compileWith(spec: FilterSpec, jsonCol: Column,
-      perFilter: PayloadFilter => Column): Column = {
+  private def compose(spec: FilterSpec, parsed: Column,
+      verb: (Column, String, String) => Column): Column = {
     FilterValidation.requireValid(spec)
     if (spec.filters.isEmpty) lit(true)
     else {
-      val preds = spec.filters.map(f => coalesce(perFilter(f), lit(false)))
-      val verdict =
-        if (spec.useOr) preds.reduce(_ || _) else preds.reduce(_ && _)
-      when(isValidJson(jsonCol), verdict).otherwise(lit(true))
-    }
-  }
-
-  /** Typed twin of [[compile]]: same P6/P7/P8 composition, numeric verbs. */
-  def compileTyped(spec: FilterSpec, jsonCol: Column): Column =
-    compileWith(spec, jsonCol,
-      f => typedVerbPredicate(extract(jsonCol, f.property), f.verb, f.value))
-
-  /** P5+P6: the composed verdict over a parsed payload (no P8 wrapping). */
-  def matchPredicate(spec: FilterSpec, jsonCol: Column): Column =
-    if (spec.filters.isEmpty) lit(!spec.useOr) // TJ:813 — AND ∅=true, OR ∅=false
-    else {
-      val preds = spec.filters.map(filterPredicate(jsonCol, _))
-      if (spec.useOr) preds.reduce(_ || _) else preds.reduce(_ && _)
-    }
-
-  /** Full delivery predicate including P8 parse-failure pass-through:
-    * malformed JSON ⇒ delivered regardless of filters.
-    *
-    * An EMPTY filter list delivers everything regardless of `useOr`: the
-    * reference only invokes `ApplyPayloadFilters` when
-    * `PayloadFilters?.Length > 0` (`KinesisThreadJobs.cs:694`), so the
-    * vacuous-OR=false rule of `matchPredicate` never applies to delivery.
-    */
-  def compile(spec: FilterSpec, jsonCol: Column): Column =
-    compileWith(spec, jsonCol,
-      f => verbPredicate(extract(jsonCol, f.property), f.verb, f.value))
-
-  /** Resolve a reference-style property path ("a.b", "ids[0]",
-    * "a.items[2].id") against an already-parsed struct column — the
-    * `SelectToken` path grammar the spec properties use (P4), re-expressed
-    * as struct/array field access instead of a per-filter JSON re-parse.
-    */
-  def structPath(parsed: Column, property: String): Column = {
-    val Seg = "^([^\\[\\]]+)((?:\\[\\d+\\])*)$".r
-    property.split('.').foldLeft(parsed) { (c, seg) =>
-      seg match {
-        case Seg(name, idxPart) =>
-          val base = c.getField(name)
-          // `get`, not `getItem`: an out-of-range index must mean "missing
-          // property" (null ⇒ non-match, P7), not an ANSI runtime error —
-          // SelectToken returns null there too
-          "\\d+".r.findAllIn(idxPart).foldLeft(base)(
-            (cc, i) => get(cc, lit(i.toInt)))
-        case _ => throw new IllegalArgumentException(
-          s"Unsupported property path segment '$seg' in '$property'")
-      }
-    }
-  }
-
-  /** Marker field capturing unparseable bodies in [[parseForFilters]]. */
-  val CorruptField = "_graft_corrupt"
-
-  /** ONE `from_json` parse of `body` suitable for [[compileParsed]]: the
-    * schema gains a corrupt-record field so that malformed JSON — which
-    * PERMISSIVE `from_json` reports as an all-null ROW, not a null struct —
-    * stays distinguishable from a valid object whose properties are
-    * missing. That distinction IS the P8 gate.
-    */
-  def parseForFilters(body: Column,
-      schema: org.apache.spark.sql.types.StructType): Column =
-    from_json(body,
-      schema.add(CorruptField, org.apache.spark.sql.types.StringType),
-      java.util.Map.of("columnNameOfCorruptRecord", CorruptField))
-
-  /** Single-parse variant of [[compile]] for plans where the filter and
-    * the projection share one JSON body: the caller parses ONCE with
-    * [[parseForFilters]] and the predicate runs against the parsed
-    * struct — no per-filter `get_json_object` re-parse, no separate
-    * validity probe.
-    *
-    * Semantics parity with [[compile]] (spec-pinned in FilterCompilerSpec):
-    *   - P8: the corrupt-record field is non-null exactly for the inputs
-    *     `JObject.Parse` throws on (malformed text, top-level arrays, bare
-    *     scalars); a JSON-null/absent body parses to a null struct. Both
-    *     ⇒ deliver unfiltered.
-    *   - P5/S1: extracted values cast to string before comparing, keeping
-    *     the reference's ordinal-string semantics even for typed fields.
-    *   - P7: a missing property extracts null ⇒ coalesce(false) non-match.
-    *
-    * The parse SCHEMA must declare every property the spec references
-    * (struct field access is resolved at analysis time — an undeclared
-    * field fails the query, P9-style fail-fast). A property declared in
-    * the schema but missing from the DOCUMENT extracts null ⇒ non-match,
-    * which is the P7 case.
-    */
-  def compileParsed(spec: FilterSpec, parsed: Column): Column =
-    compileParsedWith(spec, parsed,
-      f => verbPredicate(structPath(parsed, f.property).cast("string"),
-        f.verb, f.value))
-
-  /** Typed twin of [[compileParsed]] — [[compileTyped]]'s numeric verbs
-    * over the single-parse struct. The extracted field still goes through
-    * a STRING cast first (the declared schema is string-typed so the
-    * ordinal family shares one parse), then `try_cast(double)` exactly as
-    * the re-parse path does — same null ⇒ non-match on unparseable text.
-    */
-  def compileParsedTyped(spec: FilterSpec, parsed: Column): Column =
-    compileParsedWith(spec, parsed,
-      f => typedVerbPredicate(structPath(parsed, f.property).cast("string"),
-        f.verb, f.value))
-
-  /** Shared P6/P7/P8 composition over a [[parseForFilters]] struct —
-    * the single-parse mirror of [[compileWith]].
-    */
-  private def compileParsedWith(spec: FilterSpec, parsed: Column,
-      perFilter: PayloadFilter => Column): Column = {
-    FilterValidation.requireValid(spec)
-    if (spec.filters.isEmpty) lit(true)
-    else {
-      val preds = spec.filters.map(f => coalesce(perFilter(f), lit(false)))
-      val verdict =
-        if (spec.useOr) preds.reduce(_ || _) else preds.reduce(_ && _)
-      val isObject =
-        parsed.isNotNull && parsed.getField(CorruptField).isNull
-      when(isObject, verdict).otherwise(lit(true))
+      val preds = spec.filters.map(f => coalesce(
+        verb(extract(parsed, f.property), f.verb, f.value), lit(false)))
+      val all = if (spec.useOr) preds.reduce(_ || _) else preds.reduce(_ && _)
+      val isObject = parsed.isNotNull && parsed.getField(CorruptField).isNull
+      when(isObject, all).otherwise(lit(true))
     }
   }
 }

@@ -45,9 +45,15 @@ object FilterVerbs {
   *
   * Reference: `Decisions.Kinesis/KinesisMessageQueue.cs:459-470`
   * (`GetAdditionalValidationIssues` — non-empty property/verb/value) and
-  * `KinesisThreadJobs.cs:802-804` (unknown verb rejected).
+  * `KinesisThreadJobs.cs:802-804` (unknown verb rejected). A property
+  * must also parse as a path: `ids[`, `a..b` or `user.score]` would
+  * otherwise compile to a lookup that never matches, which under AND
+  * silently filters out every record.
   */
 object FilterValidation {
+  /** One segment of a property path (P4): a name, then any `[n]` indices. */
+  private val Segment = "[^\\[\\]]+(\\[\\d+\\])*".r
+
   def validate(spec: FilterSpec): Seq[String] = {
     // json4s maps {"filters": null} to FilterSpec(null) — report it like
     // any other issue instead of NPEing out of the validator
@@ -57,6 +63,9 @@ object FilterValidation {
     val issues = Seq.newBuilder[String]
     if (f.property == null || f.property.trim.isEmpty)
       issues += s"Payload filter property must not be empty: $f"
+    else if (!f.property.split("\\.", -1).forall(Segment.matches))
+      issues += s"Malformed payload filter property path '${f.property}': " +
+        "expected name([n])* segments joined by '.'"
     if (f.verb == null || f.verb.trim.isEmpty)
       issues += s"Payload filter verb must not be empty: $f"
     else if (!FilterVerbs.isKnown(f.verb))

@@ -39,6 +39,9 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class SubwordFold(child: Expression,
     merges: Seq[(String, String, String)]) extends UnaryExpression {
+  // the scan ≡ fold equivalence above needs every right symbol non-empty
+  require(merges.forall(_._2.nonEmpty),
+    "subword_fold merges need a non-empty right symbol")
 
   override def dataType: DataType = child.dataType match {
     case ArrayType(StringType, n) => ArrayType(StringType, n)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -10,11 +10,13 @@ import graft.filters._
   * over the `events` fixture (`props` = the JSON message body, SURVEY §2.3).
   *
   * Each query compiles a [[FilterSpec]] with [[FilterCompiler]] — the same
-  * code path a streaming queue definition uses — so the DuckDB differential
-  * check locks in the reference's semantics: string-only comparisons
-  * (finding S1, `KinesisThreadJobs.cs:743,778-801`), AND/OR composition
-  * (`:807-813`), missing-property handling (`:736-741`), parse-failure
-  * pass-through (`:694-714`).
+  * code path, one parse per body, that `QueueRuntime` runs on the consume
+  * path — so the DuckDB differential check locks in the reference's
+  * semantics: string-only comparisons (finding S1,
+  * `KinesisThreadJobs.cs:743,778-801`), AND/OR composition (`:807-813`),
+  * missing-property handling (`:736-741`), parse-failure pass-through
+  * (`:694-714`). No query declares a parse schema: the compiler derives it
+  * from the spec, and a query that also projects a field names its key.
   */
 object FilterQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -22,31 +24,27 @@ object FilterQueries {
   private def events(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
 
-  /** Single-parse plan for the whole family (the shape SCALING.md
-    * documents): ONE `from_json` feeds the P8 validity gate, every
-    * filter extraction, and the output projection. The legacy
-    * `get_json_object` path re-parses the body per call — a one-verb
-    * query pays 3 Jackson parses per row (validity probe + filter +
-    * output), measured ~1.0 s vs ~0.4 s per query at sf0.1, and the
-    * parse runs inside the SCAN stage (the filter pushes below any
-    * exchange), so it cannot be parallelized away on a one-row-group
-    * fixture. Parity with the re-parse path across object/array/scalar/
-    * malformed/null bodies is spec-pinned in FilterCompilerSpec; every
-    * oracle below is unchanged.
-    */
-  private val KSchema =
-    org.apache.spark.sql.types.StructType.fromDDL("k STRING")
+  /** The events whose JSON `body` passes `spec`, as ordered ids. */
+  private def passing(spec: FilterSpec, body: Column = col("props"),
+      compile: (FilterSpec, Column) => Column = FilterCompiler.compile): Q =
+    (s, d) => events(s, d).filter(compile(spec, body))
+      .select(col("event_id")).orderBy("event_id")
 
-  /** Spark side of a verb query on `props.$.k` (case-sensitive family). */
-  private def verbOnK(verb: String, value: String): Q = (s, d) => {
-    val spec = FilterSpec(Seq(PayloadFilter("k", verb, value)))
+  /** Spark side of a query on `props.$.k` that also projects `k`: the
+    * verdict and the projection read the same parse.
+    */
+  private def onK(spec: FilterSpec): Q = (s, d) => {
+    val parsed = col("parsed")
     events(s, d)
-      .withColumn("parsed",
-        FilterCompiler.parseForFilters(col("props"), KSchema))
-      .filter(FilterCompiler.compileParsed(spec, col("parsed")))
-      .select(col("event_id"), col("parsed.k").as("k"))
+      .withColumn("parsed", FilterCompiler.parse(col("props"), spec, "k"))
+      .filter(FilterCompiler.verdict(spec, parsed))
+      .select(col("event_id"), FilterCompiler.extract(parsed, "k").as("k"))
       .orderBy("event_id")
   }
+
+  /** A one-verb query on `props.$.k` (case-sensitive family). */
+  private def verbOnK(verb: String, value: String): Q =
+    onK(FilterSpec(Seq(PayloadFilter("k", verb, value))))
 
   private def verbOnKSql(op: String, value: String): String =
     s"""SELECT event_id, json_extract_string(props, '$$.k') AS k
@@ -61,15 +59,11 @@ object FilterQueries {
   private def ciBody = concat(lit("{\"t\":\""), col("event_type"), lit("\"}"))
   private val ciBodySql = """concat('{"t":"', event_type, '"}')"""
 
-  private val TSchema =
-    org.apache.spark.sql.types.StructType.fromDDL("t STRING")
-
   private def verbOnTypeCi(baseVerb: String, value: String): Q = (s, d) => {
     val spec = FilterSpec(Seq(
       PayloadFilter("t", baseVerb + FilterVerbs.CaseInsensitiveSuffix, value)))
     events(s, d)
-      .withColumn("parsed", FilterCompiler.parseForFilters(ciBody, TSchema))
-      .filter(FilterCompiler.compileParsed(spec, col("parsed")))
+      .filter(FilterCompiler.compile(spec, ciBody))
       .select(col("event_id"), col("event_type"))
       .orderBy("event_id")
   }
@@ -107,134 +101,68 @@ object FilterQueries {
     "f_gte_ci" -> verbOnTypeCi(FilterVerbs.GreaterThanOrEqual, "SIGNUP"),
     "f_lte_ci" -> verbOnTypeCi(FilterVerbs.LessThanOrEqual, "click"),
     // ---- composition (P6) ----
-    "f_and" -> { (s, d) =>
-      val spec = FilterSpec(Seq(
-        PayloadFilter("k", FilterVerbs.GreaterThan, "2"),
-        PayloadFilter("k", FilterVerbs.LessThan, "6"),
-        PayloadFilter("k", FilterVerbs.Contains, "3")))
-      events(s, d)
-        .withColumn("parsed",
-          FilterCompiler.parseForFilters(col("props"), KSchema))
-        .filter(FilterCompiler.compileParsed(spec, col("parsed")))
-        .select(col("event_id"), col("parsed.k").as("k"))
-        .orderBy("event_id")
-    },
-    "f_or" -> { (s, d) =>
-      val spec = FilterSpec(Seq(
-        PayloadFilter("k", FilterVerbs.Equals, "87"),
-        PayloadFilter("k", FilterVerbs.Equals, "12"),
-        PayloadFilter("k", FilterVerbs.StartsWith, "99")), useOr = true)
-      events(s, d)
-        .withColumn("parsed",
-          FilterCompiler.parseForFilters(col("props"), KSchema))
-        .filter(FilterCompiler.compileParsed(spec, col("parsed")))
-        .select(col("event_id"), col("parsed.k").as("k"))
-        .orderBy("event_id")
-    },
+    "f_and" -> onK(FilterSpec(Seq(
+      PayloadFilter("k", FilterVerbs.GreaterThan, "2"),
+      PayloadFilter("k", FilterVerbs.LessThan, "6"),
+      PayloadFilter("k", FilterVerbs.Contains, "3")))),
+    "f_or" -> onK(FilterSpec(Seq(
+      PayloadFilter("k", FilterVerbs.Equals, "87"),
+      PayloadFilter("k", FilterVerbs.Equals, "12"),
+      PayloadFilter("k", FilterVerbs.StartsWith, "99")), useOr = true)),
     // ---- missing property (P7): AND rejects, OR skips ----
-    "f_missing_and" -> { (s, d) =>
-      val spec = FilterSpec(Seq(
-        PayloadFilter("k", FilterVerbs.GreaterThan, "1"),
-        PayloadFilter("nope", FilterVerbs.Equals, "x")))
-      events(s, d)
-        .withColumn("parsed", FilterCompiler.parseForFilters(col("props"),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "k STRING, nope STRING")))
-        .filter(FilterCompiler.compileParsed(spec, col("parsed")))
-        .select(col("event_id")).orderBy("event_id")
-    },
-    "f_missing_or" -> { (s, d) =>
-      val spec = FilterSpec(Seq(
-        PayloadFilter("nope", FilterVerbs.Equals, "x"),
-        PayloadFilter("k", FilterVerbs.Equals, "87")), useOr = true)
-      events(s, d)
-        .withColumn("parsed", FilterCompiler.parseForFilters(col("props"),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "k STRING, nope STRING")))
-        .filter(FilterCompiler.compileParsed(spec, col("parsed")))
-        .select(col("event_id")).orderBy("event_id")
-    },
+    "f_missing_and" -> passing(FilterSpec(Seq(
+      PayloadFilter("k", FilterVerbs.GreaterThan, "1"),
+      PayloadFilter("nope", FilterVerbs.Equals, "x")))),
+    "f_missing_or" -> passing(FilterSpec(Seq(
+      PayloadFilter("nope", FilterVerbs.Equals, "x"),
+      PayloadFilter("k", FilterVerbs.Equals, "87")), useOr = true)),
     // ---- parse-failure pass-through (P8) ----
-    "f_parse_passthrough" -> { (s, d) =>
-      // Deterministically corrupt every 10th body, then filter k=87: the
-      // corrupt records must be DELIVERED (reference catch falls through to
-      // dispatch, `KinesisThreadJobs.cs:705-714`).
-      val spec = FilterSpec(Seq(PayloadFilter("k", FilterVerbs.Equals, "87")))
-      val body = when(col("event_id") % 10 === 0, substring(col("props"), 1, 3))
-        .otherwise(col("props"))
-      events(s, d)
-        .withColumn("parsed", FilterCompiler.parseForFilters(body, KSchema))
-        .filter(FilterCompiler.compileParsed(spec, col("parsed")))
-        .select(col("event_id")).orderBy("event_id")
-    },
+    // Deterministically corrupt every 10th body, then filter k=87: the
+    // corrupt records must be DELIVERED (reference catch falls through to
+    // dispatch, `KinesisThreadJobs.cs:705-714`).
+    "f_parse_passthrough" -> passing(
+      FilterSpec(Seq(PayloadFilter("k", FilterVerbs.Equals, "87"))),
+      when(col("event_id") % 10 === 0, substring(col("props"), 1, 3))
+        .otherwise(col("props"))),
     // ---- typed-comparison EXTENSION: numeric verbs over JSON fields.
     // Not reference behavior (S1 string semantics stay the default);
     // gate-checked so the extension surface is as hard-verified as the
     // ported one. ft_gt_typed vs f_gt differ on ~800 rows at sf0.01
     // ("9" > "10" string-wise but not numerically). ----
-    "ft_gt_typed" -> { (s, d) =>
-      val spec = FilterSpec(Seq(
-        PayloadFilter("k", FilterVerbs.GreaterThan, "10")))
-      events(s, d)
-        .withColumn("parsed",
-          FilterCompiler.parseForFilters(col("props"), KSchema))
-        .filter(FilterCompiler.compileParsedTyped(spec, col("parsed")))
-        .select(col("event_id")).orderBy("event_id")
-    },
-    "ft_range_typed" -> { (s, d) => // AND of numeric bounds: 25 ≤ k < 75
-      val spec = FilterSpec(Seq(
-        PayloadFilter("k", FilterVerbs.GreaterThanOrEqual, "25"),
-        PayloadFilter("k", FilterVerbs.LessThan, "75")))
-      events(s, d)
-        .withColumn("parsed",
-          FilterCompiler.parseForFilters(col("props"), KSchema))
-        .filter(FilterCompiler.compileParsedTyped(spec, col("parsed")))
-        .select(col("event_id")).orderBy("event_id")
-    },
+    "ft_gt_typed" -> passing(FilterSpec(Seq(
+      PayloadFilter("k", FilterVerbs.GreaterThan, "10"))),
+      compile = FilterCompiler.compileTyped),
+    "ft_range_typed" -> passing(FilterSpec(Seq( // 25 ≤ k < 75, numerically
+      PayloadFilter("k", FilterVerbs.GreaterThanOrEqual, "25"),
+      PayloadFilter("k", FilterVerbs.LessThan, "75"))),
+      compile = FilterCompiler.compileTyped),
     // ---- P8 object-shape: top-level arrays / bare scalars are NOT
     // JObjects — JObject.Parse throws and the record is delivered
     // unfiltered, exactly like malformed JSON ----
-    "f_object_only" -> { (s, d) =>
-      val spec = FilterSpec(Seq(
-        PayloadFilter("k", FilterVerbs.GreaterThan, "5")))
-      val body = when(col("event_id") % 4 === 1, lit("[1,2,3]"))
+    "f_object_only" -> passing(
+      FilterSpec(Seq(PayloadFilter("k", FilterVerbs.GreaterThan, "5"))),
+      when(col("event_id") % 4 === 1, lit("[1,2,3]"))
         .when(col("event_id") % 4 === 2,
-          FilterCompiler.extract(col("props"), "k")) // bare numeric scalar
+          get_json_object(col("props"), "$.k")) // bare numeric scalar
         .when(col("event_id") % 4 === 3, lit("\"just a string\""))
-        .otherwise(col("props")) // a real object: filters apply
-      events(s, d)
-        .withColumn("parsed", FilterCompiler.parseForFilters(body, KSchema))
-        .filter(FilterCompiler.compileParsed(spec, col("parsed")))
-        .select(col("event_id")).orderBy("event_id")
-    },
+        .otherwise(col("props"))), // a real object: filters apply
     // ---- empty filter list: everything delivered (TJ:694 guard) ----
-    "f_empty_spec" -> { (s, d) =>
-      events(s, d)
-        .filter(FilterCompiler.compile(FilterSpec(Nil, useOr = true),
-          col("props")))
-        .select(col("event_id")).orderBy("event_id")
-    },
-    // ---- JSON array paths: SelectToken supports indexing ("items[0].id")
-    // and so does get_json_object — same verb machinery, deeper paths ----
+    "f_empty_spec" -> passing(FilterSpec(Nil, useOr = true)),
+    // ---- JSON array paths: SelectToken supports indexing ("items[0].id");
+    // the filter and both projections read one parse ----
     "f_array_path" -> { (s, d) =>
       val body = concat(lit("{\"ids\":[\""), col("event_type"),
         lit("\",\"backup\"],\"ks\":["),
-        FilterCompiler.extract(col("props"), "k"), lit(",5]}"))
+        get_json_object(col("props"), "$.k"), lit(",5]}"))
       val spec = FilterSpec(Seq(
         PayloadFilter("ids[0]", FilterVerbs.Equals, "purchase")))
-      // Single-parse plan (SCALING.md): filter AND both output extractions
-      // run against ONE from_json of the body via compileParsed — the
-      // earlier shape paid three Jackson parses per row (validity probe +
-      // filter extract via get_json_object + from_json for outputs).
-      val parsedSchema = org.apache.spark.sql.types.StructType.fromDDL(
-        "ids ARRAY<STRING>, ks ARRAY<INT>")
+      val parsed = col("parsed")
       events(s, d)
-        .withColumn("parsed",
-          FilterCompiler.parseForFilters(body, parsedSchema))
-        .filter(FilterCompiler.compileParsed(spec, col("parsed")))
+        .withColumn("parsed", FilterCompiler.parse(body, spec, "ks"))
+        .filter(FilterCompiler.verdict(spec, parsed))
         .select(col("event_id"),
-          col("parsed.ks").getItem(0).cast("string").as("k0"),
-          col("parsed.ids").getItem(1).as("backup"))
+          FilterCompiler.extract(parsed, "ks[0]").as("k0"),
+          FilterCompiler.extract(parsed, "ids[1]").as("backup"))
         .orderBy("event_id")
     },
     // ---- metadata/data projections (P1-P3, KinesisUtils.cs:146-183) ----

@@ -367,7 +367,8 @@ object CorpusOps {
       val inSample = col(s"h$r") * lit(1000000L) < rateCol * lit(1048576L)
       // uni persisted per round (r16): it feeds the vocabulary-size
       // count AND the CE join, and AQE does not reuse the duplicate
-      // aggregation (ReuseCheck) — sampled-vocab-sized, released below
+      // aggregation (OPTIMIZATION_r16.md) — sampled-vocab-sized,
+      // released below
       val uni = tok.filter(inSample)
         .groupBy("w1").agg(count(lit(1)).as("c1")).persist()
       val big = bi.filter(inSample)

@@ -145,7 +145,7 @@ object Dedup {
         retain(ex)
         // hot is persisted too (r16): it feeds the drop-count join AND
         // the anti-join, and AQE does not reuse the duplicate df
-        // aggregation across consumers (ReuseCheck) — each consumer
+        // aggregation across consumers (OPTIMIZATION_r16.md) — each consumer
         // re-shuffled the full shingle cache. Rows = over-cap shingles
         // only: tiny by construction at any corpus size.
         val hot = ex.groupBy("s").agg(count(lit(1)).as("dfc"))
@@ -334,7 +334,8 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // prefixes persisted (r16): both self-join sides consume it, and
     // AQE does not reuse the duplicate explode-over-cache subtrees
-    // (ReuseCheck); rows ≈ (1−t)·shingle mass, narrow (two longs + id)
+    // (OPTIMIZATION_r16.md); rows ≈ (1−t)·shingle mass, narrow (two
+    // longs + id)
     val prefixes = ordered.select(col("doc_id"), col("n"),
       explode(slice(col("os"), lit(1),
         (col("n") - safeCeil(lit(threshold) * col("n")) + 1)

@@ -121,7 +121,7 @@ object Fingerprints {
     // consumers (both sides of the small-bucket self-join, the star
     // tier's rows, and its reps aggregation). The original comment here
     // assumed AQE would reuse the sizes exchange across consumers;
-    // runtime profiling (ReuseCheck, r16) showed Spark 4.1 under AQE
+    // runtime profiling (OPTIMIZATION_r16.md) showed Spark 4.1 under AQE
     // does NOT reuse structurally-identical stages across self-join
     // sides, so each consumer re-evaluated `banded` and re-aggregated
     // the bucket sizes. Rows are id + bucket keys + one long — narrow
@@ -208,7 +208,7 @@ object Fingerprints {
       cap: Int = -1): DataFrame = {
     // persisted (r16): the signature frame feeds the banding AND both
     // estimate re-fetch joins, and AQE does not collapse the duplicate
-    // subtrees (ReuseCheck) — without the cache the full corpus
+    // subtrees (OPTIMIZATION_r16.md) — without the cache the full corpus
     // md5+sketch aggregation pass ran once per consumer. One 128-byte
     // array per doc; lazy, harness/caller owns release.
     val sigsP = signatures.persist()
@@ -501,7 +501,7 @@ object Fingerprints {
     // banded persisted too (r16): FOUR consumers (uncapped self-join
     // ×2, cappedPairs' size agg + join) each re-ran the band explode
     // over the fingerprint cache — AQE does not collapse the duplicate
-    // subtrees (ReuseCheck); 4 narrow rows/doc
+    // subtrees (OPTIMIZATION_r16.md); 4 narrow rows/doc
     val banded = simhashBands(f).persist()
     val uncapped = banded.select(col("doc_id").as("da"),
         col("band"), col("bkey"))

@@ -110,8 +110,8 @@ object Retrieval {
       .toDF("query_id", "w")
     // rel persisted (r17): the DCG join and the ideal-top-10 heap both
     // consume it, and AQE does not reuse the duplicate distinct-gram
-    // pass (ReuseCheck). |queries|·|docs-with-terms| rows, tiny; lazy,
-    // harness-released.
+    // pass (OPTIMIZATION_r16.md). |queries|·|docs-with-terms| rows,
+    // tiny; lazy, harness-released.
     val rel = docs.select(col("doc_id"),
         explode(array_distinct(split(col("text"), " "))).as("w"))
       .join(broadcast(qt), "w")

@@ -406,7 +406,8 @@ object TrainingSet {
           element_at(col("t"), col("i") + 1))).as("b"))
     // feats persisted (r17): FOUR consumers (raw, tgtC, totals, and the
     // scoring join) each re-ran the explode + per-occurrence md5 union
-    // pipeline — AQE does not reuse the duplicate subtrees (ReuseCheck).
+    // pipeline — AQE does not reuse the duplicate subtrees
+    // (OPTIMIZATION_r16.md).
     // Narrow (doc, tgt, bucket, count) rows; lazy MEMORY_AND_DISK,
     // harness owns release.
     val feats = uni.union(bi)
@@ -744,9 +745,9 @@ object TrainingSet {
             lit(25) * col("mx") <= lit(2) * col("s")).as("v_repetition"))
       // sh persisted (r17): it feeds the df aggregation AND the probe
       // side of the df join, and AQE does not reuse the duplicate
-      // explode across consumers (ReuseCheck) — profiled as two ~equal
-      // ~11-taskSec shingle passes. The jaccardPairsFrom diamond rule;
-      // harness owns release (clearCache per query/sample).
+      // explode across consumers (OPTIMIZATION_r16.md) — profiled as two
+      // ~equal ~11-taskSec shingle passes. The jaccardPairsFrom diamond
+      // rule; harness owns release (clearCache per query/sample).
       val sh = docs.select(col("doc_id"),
         explode(Dedup.shingles(col("text"))).as("ngram"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -845,7 +846,7 @@ object TrainingSet {
         col("doc_id") < 10000000L
       // bench persisted (r17): it feeds the bloom build's treeAggregate
       // AND the exact-confirm broadcast join (the diamond rule; AQE does
-      // not reuse the duplicate distinct, ReuseCheck). Distinct 64-bit
+      // not reuse the duplicate distinct, OPTIMIZATION_r16.md). Distinct 64-bit
       // grams of the benchmark slice only — broadcast-sized by the same
       // argument as the sketch; harness owns release.
       val bench = grams(docs.filter(isBench)).select("g").distinct()

@@ -224,7 +224,7 @@ object WordPiece {
         .agg(sum(col("freq")).as("cnt"))
         .persist()
       // uni persisted (r16): BOTH score-join broadcasts build from it,
-      // and AQE does not reuse the duplicate aggregation (ReuseCheck);
+      // and AQE does not reuse the duplicate aggregation (OPTIMIZATION_r16.md);
       // symbol-alphabet-sized, released with pc below
       val uni = pc.groupBy("a").agg(sum(col("cnt")).as("c"))
         .select(col("a").as("s"), col("c")).persist()

@@ -112,17 +112,6 @@ class FilterCompilerSpec extends AnyFunSuite {
     assert(verdicts(Seq(doc), FilterSpec(Nil, useOr = true)) == Seq(true))
   }
 
-  test("vacuous matchPredicate follows TJ:813: AND ∅=true, OR ∅=false") {
-    val df = Seq(doc).toDF("body")
-    val and = df.select(FilterCompiler
-      .matchPredicate(FilterSpec(Nil, useOr = false), col("body")).as("v"))
-      .head().getBoolean(0)
-    val or = df.select(FilterCompiler
-      .matchPredicate(FilterSpec(Nil, useOr = true), col("body")).as("v"))
-      .head().getBoolean(0)
-    assert(and && !or)
-  }
-
   test("unknown verb fails at compile time (P9, TJ:802-804)") {
     val spec = FilterSpec(Seq(PayloadFilter("s", "Approximately", "x")))
     intercept[IllegalArgumentException] {
@@ -139,6 +128,21 @@ class FilterCompilerSpec extends AnyFunSuite {
       PayloadFilter("p", "Equals", "")))).nonEmpty)
     assert(FilterValidation.validate(FilterSpec(Seq(
       PayloadFilter("p", "Equals", "x")))).isEmpty)
+  }
+
+  test("validation rejects malformed property paths (P4 grammar)") {
+    for (p <- Seq("ids[", "a..b", "user.score]", ".a", "a.", "a[x]", "a[0]b"))
+      assert(FilterValidation.validate(FilterSpec(Seq(
+        PayloadFilter(p, "Equals", "x")))).nonEmpty, p)
+    for (p <- Seq("k", "a.b.c", "ids[0]", "a.items[2].id", "m[0][1]"))
+      assert(FilterValidation.validate(FilterSpec(Seq(
+        PayloadFilter(p, "Equals", "x")))).isEmpty, p)
+    // on the compile and consume paths too: one typo under AND would
+    // otherwise silently filter out every record
+    intercept[IllegalArgumentException] {
+      FilterCompiler.compile(
+        FilterSpec(Seq(PayloadFilter("ids[", "Equals", "x"))), col("body"))
+    }
   }
 
   test("nested JSON path with arbitrary depth") {
@@ -185,99 +189,109 @@ class FilterCompilerSpec extends AnyFunSuite {
     }
   }
 
-  // ---- single-parse path (compileParsed) ---------------------------------
+  // ---- truth table ---------------------------------------------------
 
-  private val parsedSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "user STRUCT<type: STRING>, n STRING, s STRING, " +
-      "ids ARRAY<STRING>, ks ARRAY<INT>, missing STRING")
+  /** One (body, spec, expected verdict) row; `typed` runs it through
+    * [[FilterCompiler.compileTyped]] instead of [[FilterCompiler.compile]].
+    */
+  private case class Row(body: String, spec: FilterSpec, expect: Boolean,
+      typed: Boolean = false)
 
-  /** compileParsed over one from_json of the body. */
-  private def verdictsParsed(bodies: Seq[String],
-      spec: FilterSpec): Seq[Boolean] = {
-    val df = bodies.toDF("body")
-      .withColumn("parsed",
-        FilterCompiler.parseForFilters(col("body"), parsedSchema))
-    df.select(FilterCompiler.compileParsed(spec, col("parsed")).as("v"))
-      .collect().map(_.getBoolean(0)).toSeq
-  }
+  private def and(fs: PayloadFilter*) = FilterSpec(fs)
+  private def or(fs: PayloadFilter*) = FilterSpec(fs, useOr = true)
+  private def f(p: String, verb: String, v: String) = PayloadFilter(p, verb, v)
 
-  test("compileParsed ≡ compile across object / missing-prop / array / " +
-      "scalar / malformed / null bodies (P5-P8 parity)") {
-    val bodies = Seq(
-      doc,                               // object, all props present
-      """{"s":"Hello"}""",               // object, filter prop missing
-      "[1,2,3]",                         // top-level array → deliver
-      "42",                              // bare scalar → deliver
-      "\"just a string\"",               // bare string → deliver
-      "not json at all",                 // malformed → deliver
-      "null",                            // bare null → deliver
-      null)                              // null body → deliver
-    val specs = Seq(
-      FilterSpec(Seq(PayloadFilter("user.type", "Equals", "Admin"))),
-      FilterSpec(Seq(PayloadFilter("n", "Greater Than", "100"))), // S1 string
-      FilterSpec(Seq(
-        PayloadFilter("user.type", "Equals", "Admin"),
-        PayloadFilter("missing", "Equals", "x"))),
-      FilterSpec(Seq(
-        PayloadFilter("user.type", "Equals", "nope"),
-        PayloadFilter("s", "Starts With (Case Insensitive)", "hel")),
-        useOr = true),
-      FilterSpec(Nil))
-    for (spec <- specs)
-      assert(verdictsParsed(bodies, spec) == verdicts(bodies, spec),
-        s"single-parse verdicts diverged for $spec")
-  }
+  private val adminIs = and(f("user.type", "Equals", "Admin"))
+  private val arrays = """{"ids":["purchase","backup"],"ks":[7,5]}"""
+  private val eventNot = and(f("event.type", "Not Equals", "refund"))
 
-  test("compileParsedTyped ≡ compileTyped across the same body shapes " +
-      "(numeric verbs, P7/P8 parity)") {
-    val bodies = Seq(
-      doc,                               // n = "42"
-      """{"n":"9"}""",                   // 9 < 100 numerically, > ordinally
-      """{"n":"abc"}""",                 // unparseable number → non-match
-      """{"s":"Hello"}""",               // n missing → non-match
-      "[1,2,3]", "42", "not json at all", "null", null) // all deliver
-    val specs = Seq(
-      FilterSpec(Seq(PayloadFilter("n", "Greater Than", "100"))),
-      FilterSpec(Seq(PayloadFilter("n", "Less Than or Equal", "42"))),
-      FilterSpec(Seq(
-        PayloadFilter("n", "Greater Than or Equal", "9"),
-        PayloadFilter("n", "Less Than", "50"))),
-      FilterSpec(Seq(
-        PayloadFilter("n", "Equals", "42"),
-        PayloadFilter("missing", "Not Equals", "5")), useOr = true))
-    for (spec <- specs) {
-      val df = bodies.toDF("body")
-        .withColumn("parsed",
-          FilterCompiler.parseForFilters(col("body"), parsedSchema))
-      val parsed = df
-        .select(FilterCompiler.compileParsedTyped(spec, col("parsed")).as("v"))
-        .collect().map(_.getBoolean(0)).toSeq
-      val reparse = bodies.toDF("body")
-        .select(FilterCompiler.compileTyped(spec, col("body")).as("v"))
-        .collect().map(_.getBoolean(0)).toSeq
-      assert(parsed == reparse, s"typed single-parse diverged for $spec")
+  private val table = Seq(
+    // object, missing property, composition
+    Row(doc, adminIs, true),
+    Row(doc, and(f("n", "Greater Than", "100")), true),  // S1: "42" > "100"
+    Row(doc, and(f("user.type", "Equals", "Admin"),
+      f("missing", "Equals", "x")), false),                // P7 under AND
+    Row(doc, or(f("user.type", "Equals", "nope"),
+      f("s", "Starts With (Case Insensitive)", "hel")), true),
+    Row("""{"s":"Hello"}""", adminIs, false),
+    Row("""{"s":"Hello"}""", or(f("missing", "Equals", "x"),
+      f("s", "Equals", "Hello")), true),                   // P7 under OR
+    Row(doc, FilterSpec(Nil), true),                       // TJ:694 guard
+    Row(doc, FilterSpec(Nil, useOr = true), true),
+    // P8: not a JSON object ⇒ delivered unfiltered
+    Row("[1,2,3]", adminIs, true),
+    Row("42", adminIs, true),
+    Row("\"just a string\"", adminIs, true),
+    Row("not json at all", adminIs, true),
+    Row("""{"k": 87""", adminIs, true),
+    Row("null", adminIs, true),
+    Row(null, adminIs, true),
+    // array-index paths; out of range is missing
+    Row(arrays, and(f("ids[0]", "Equals", "purchase")), true),
+    Row("""{"ids":["refund"]}""", and(f("ids[0]", "Equals", "purchase")),
+      false),
+    Row("""{"ids":[]}""", and(f("ids[0]", "Equals", "purchase")), false),
+    Row(arrays, and(f("ks[1]", "Equals", "5")), true),
+    Row(arrays, and(f("ks[0]", "Greater Than", "10")), true), // "7" > "10"
+    Row("""{"a":{"items":[{"id":"x"},{"id":"y"}]}}""",
+      and(f("a.items[1].id", "Equals", "y")), true),
+    // an intermediate key that is not an object: the path is missing
+    Row("""{"event":{"type":"click"}}""", eventNot, true),
+    Row("""{"event":"click"}""", eventNot, false),
+    Row("""{"event":["click"]}""", eventNot, false),
+    Row("""{"event":5}""", eventNot, false),
+    // parser details shared with get_json_object
+    Row("{\"k\":\"a\nb\"}", and(f("k", "Equals", "a\nb")), true),
+    Row("{\"k\":\"a\nb\"}", and(f("k", "Equals", "x")), false),
+    Row("""{"k":"87","z":NaN}""", and(f("k", "Equals", "x")), true),
+    Row("""{"k":"87","z":007}""", and(f("k", "Equals", "x")), true),
+    Row("""{'k':'87'}""", and(f("k", "Equals", "87")), true),
+    Row("""{'k':'87'}""", and(f("k", "Equals", "x")), false),
+    Row("""{"k":"87"} trailing""", and(f("k", "Equals", "x")), false),
+    Row("""{"k":"87"} trailing""", and(f("k", "Equals", "87")), true),
+    Row("""{"k":"a\"b"}""", and(f("k", "Equals", "a\"b")), true),
+    Row("{\"k\":\"caf" + '\\' + "u00e9\"}", and(f("k", "Equals", "café")),
+      true),
+    Row("""{"K":"87"}""", and(f("k", "Equals", "87")), false),
+    Row("""{"k":1.50,"o":{"a" : 1}}""", and(f("k", "Equals", "1.5"),
+      f("o", "Equals", "{\"a\":1}")), true),               // compact forms
+    Row("""{"e":{"t":"a","t":"b"}}""", and(f("e.t", "Equals", "a")), true),
+    // the two verdicts that differ from a whole-body get_json_object:
+    // a duplicate top-level key reads its LAST value, and a string whose
+    // text is a JSON object is traversed by a nested path
+    Row("""{"k":"a","k":"b"}""", and(f("k", "Equals", "b")), true),
+    Row("""{"event":"{\"type\":\"refund\"}"}""",
+      and(f("event.type", "Equals", "refund")), true),
+    // typed extension: numeric verbs, same P7/P8
+    Row(doc, and(f("n", "Greater Than", "100")), false, typed = true),
+    Row("""{"n":"9"}""", and(f("n", "Less Than or Equal", "42")), true,
+      typed = true),
+    Row("""{"n":"9"}""", and(f("n", "Greater Than or Equal", "9"),
+      f("n", "Less Than", "50")), true, typed = true),
+    Row("""{"n":"abc"}""", and(f("n", "Equals", "1")), false, typed = true),
+    Row("""{"s":"Hello"}""", and(f("n", "Equals", "42")), false,
+      typed = true),
+    Row(doc, or(f("n", "Equals", "42"), f("missing", "Not Equals", "5")),
+      true, typed = true),
+    Row(arrays, and(f("ks[0]", "Greater Than", "10")), false, typed = true),
+    Row("""{"event":"5"}""", and(f("event.type", "Less Than", "10")), false,
+      typed = true),
+    Row("[1,2,3]", and(f("n", "Greater Than", "100")), true, typed = true),
+    Row("not json at all", and(f("n", "Equals", "1")), true, typed = true),
+    Row("null", and(f("n", "Equals", "1")), true, typed = true),
+    Row(null, and(f("n", "Equals", "1")), true, typed = true))
+
+  test("truth table: compile and compileTyped verdicts per (body, spec)") {
+    // one job: every row's predicate is a column over every body, and
+    // each row reads its own cell
+    val cols = table.zipWithIndex.map { case (r, i) =>
+      val c = if (r.typed) FilterCompiler.compileTyped(r.spec, col("body"))
+        else FilterCompiler.compile(r.spec, col("body"))
+      c.as(s"v$i")
     }
-  }
-
-  test("compileParsed resolves array-index paths against the struct " +
-      "(P4 grammar: ids[0], ks[1])") {
-    val bodies = Seq(
-      """{"ids":["purchase","backup"],"ks":[7,5]}""",
-      """{"ids":["refund","backup"],"ks":[7,5]}""",
-      """{"ids":[],"ks":[7,5]}""") // index out of range → null → non-match
-    val spec = FilterSpec(Seq(PayloadFilter("ids[0]", "Equals", "purchase")))
-    assert(verdictsParsed(bodies, spec) == Seq(true, false, false))
-    // typed field compared as its STRING form (S1 parity): ks[1]="5"
-    val spec2 = FilterSpec(Seq(PayloadFilter("ks[1]", "Equals", "5")))
-    assert(verdictsParsed(bodies.take(1), spec2) == Seq(true))
-    // and ordinal-string ordering survives the typed field: "7" > "10"
-    val spec3 = FilterSpec(Seq(PayloadFilter("ks[0]", "Greater Than", "10")))
-    assert(verdictsParsed(bodies.take(1), spec3) == Seq(true))
-  }
-
-  test("structPath rejects malformed path segments") {
-    intercept[IllegalArgumentException] {
-      FilterCompiler.structPath(col("p"), "ids[")
-    }
+    val got = table.map(_.body).toDF("body").select(cols: _*).collect()
+    for ((r, i) <- table.zipWithIndex)
+      assert(got(i).getBoolean(i) == r.expect,
+        s"row $i: body=${r.body} spec=${r.spec} typed=${r.typed}")
   }
 }

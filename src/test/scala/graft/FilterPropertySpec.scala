@@ -10,7 +10,9 @@ import graft.filters.{FilterCompiler, FilterSpec, FilterVerbs, PayloadFilter}
   * the reference semantics (`KinesisThreadJobs.cs:694-814`) on randomized
   * (document, spec) pairs — ordinal string comparisons, case-insensitive
   * variants, missing-property non-match, AND/OR composition, and
-  * non-object/malformed pass-through. 60 random specs × 48 random docs
+  * non-object/malformed pass-through, and a nested path whose
+  * intermediate key holds an object in some docs and a string or an
+  * array in others (missing, P7). 60 random specs × 48 random docs
   * evaluate as ONE Spark job (each spec compiled as a column), so the
   * 2,880-cell matrix costs a single collect.
   */
@@ -20,6 +22,8 @@ class FilterPropertySpec extends AnyFunSuite {
   // --- deterministic generators -------------------------------------
   private val rnd = new scala.util.Random(42)
   private val keys = Seq("a", "b", "cc")
+  /** Properties specs draw from: the flat keys and a path through `o`. */
+  private val props = keys :+ "o.p"
   private def randToken(): String = {
     val alphabet = "abcABC019 _-"
     val n = 1 + rnd.nextInt(6)
@@ -27,21 +31,48 @@ class FilterPropertySpec extends AnyFunSuite {
       .trim match { case "" => "x"; case s => s }
   }
 
-  /** A doc is either a known flat object or a non-object/malformed body. */
-  private sealed trait Doc { def render: String }
-  private case class ObjDoc(fields: Map[String, String]) extends Doc {
+  /** A field value: a string, a flat object of strings, or an array. */
+  private sealed trait Value { def render: String }
+  private case class Str(s: String) extends Value {
+    def render: String = "\"" + s + "\""
+  }
+  private case class Obj(fields: Map[String, String]) extends Value {
     def render: String = fields.map { case (k, v) =>
-      "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}")
+      "\"" + k + "\":" + Str(v).render }.mkString("{", ",", "}")
+  }
+  private case class Arr(items: Seq[String]) extends Value {
+    def render: String = items.map(Str(_).render).mkString("[", ",", "]")
+  }
+
+  /** A doc is either a known object or a non-object/malformed body. */
+  private sealed trait Doc { def render: String }
+  private case class ObjDoc(fields: Map[String, Value]) extends Doc {
+    def render: String = fields.map { case (k, v) =>
+      "\"" + k + "\":" + v.render }.mkString("{", ",", "}")
   }
   private case class RawDoc(body: String) extends Doc {
     def render: String = body
   }
 
+  /** An object doc: a random subset of the flat keys, and `o` absent or
+    * holding a string, an array, or an object with some of `p`, `q`.
+    */
+  private def randObj(value: () => String): ObjDoc = {
+    val o: Seq[(String, Value)] = rnd.nextInt(4) match {
+      case 0 => Nil
+      case 1 => Seq("o" -> Str(value()))
+      case 2 => Seq("o" -> Arr(Seq(value())))
+      case _ => Seq("o" -> Obj(Seq("p", "q").filter(_ => rnd.nextBoolean())
+        .map(_ -> value()).toMap))
+    }
+    ObjDoc((keys.filter(_ => rnd.nextBoolean())
+      .map(k => k -> (Str(value()): Value)) ++ o).toMap)
+  }
+
   private def randDoc(): Doc = rnd.nextInt(10) match {
     case 0 => RawDoc(Seq("[1,2,3]", "42", "\"str\"", "{broken",
       "not json at all")(rnd.nextInt(5)))
-    case _ => ObjDoc(keys.filter(_ => rnd.nextBoolean())
-      .map(k => k -> randToken()).toMap)
+    case _ => randObj(() => randToken())
   }
 
   private val allVerbs = {
@@ -53,11 +84,21 @@ class FilterPropertySpec extends AnyFunSuite {
 
   private def randSpec(): FilterSpec = FilterSpec(
     (0 until (1 + rnd.nextInt(3))).map { _ =>
-      PayloadFilter(keys(rnd.nextInt(keys.length)),
+      PayloadFilter(props(rnd.nextInt(props.length)),
         allVerbs(rnd.nextInt(allVerbs.length)), randToken())
     }, useOr = rnd.nextBoolean())
 
   // --- independent reference interpreter (C# semantics) --------------
+  /** `SelectToken`: a path that runs through a non-object is missing. */
+  private def lookup(fields: Map[String, Value],
+      property: String): Option[String] =
+    property.split('.').toList match {
+      case k :: Nil => fields.get(k).collect { case Str(v) => v }
+      case k :: p :: Nil => fields.get(k).collect { case Obj(m) => m.get(p) }
+        .flatten
+      case _ => None
+    }
+
   private def refVerb(v: String, verb: String, fv: String): Boolean = {
     import FilterVerbs._
     val ci = verb.endsWith(CaseInsensitiveSuffix)
@@ -84,7 +125,7 @@ class FilterPropertySpec extends AnyFunSuite {
     case RawDoc(_) => true                 // JObject.Parse throws ⇒ deliver
     case ObjDoc(fields) =>
       val verdicts = spec.filters.map { f =>
-        fields.get(f.property) match {
+        lookup(fields, f.property) match {
           case None => false // P7: missing ⇒ non-match
           case Some(v) => refVerb(v, f.verb, f.value)
         }
@@ -117,7 +158,7 @@ class FilterPropertySpec extends AnyFunSuite {
       case RawDoc(_) => true
       case ObjDoc(fields) =>
         val verdicts = spec.filters.map { f =>
-          fields.get(f.property) match {
+          lookup(fields, f.property) match {
             case None => false
             case Some(v) => refTypedVerb(v, f.verb, f.value)
           }
@@ -137,7 +178,7 @@ class FilterPropertySpec extends AnyFunSuite {
 
   private def randTypedSpec(): FilterSpec = FilterSpec(
     (0 until (1 + rnd.nextInt(3))).map { _ =>
-      PayloadFilter(keys(rnd.nextInt(keys.length)),
+      PayloadFilter(props(rnd.nextInt(props.length)),
         typedVerbs(rnd.nextInt(typedVerbs.length)),
         // filter value must be numeric (validated); field values may not
         Seq("0", "7", "42", "-3", "3.5", "1000", "9",
@@ -146,8 +187,7 @@ class FilterPropertySpec extends AnyFunSuite {
 
   private def randNumDoc(): Doc = rnd.nextInt(10) match {
     case 0 => RawDoc(Seq("[1,2,3]", "42", "{oops")(rnd.nextInt(3)))
-    case _ => ObjDoc(keys.filter(_ => rnd.nextBoolean())
-      .map(k => k -> randNumericish()).toMap)
+    case _ => randObj(() => randNumericish())
   }
 
   test("typed compiler == numeric reference interpreter on 40×40 matrix") {

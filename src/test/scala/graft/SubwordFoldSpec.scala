@@ -70,13 +70,28 @@ class SubwordFoldSpec extends AnyFunSuite {
     val df = Seq("abab", "aabb").toDF("w")
       .select(subword_fold(split(col("w"), ""), merges).as("sym"))
     val on = df.collect().map(_.getSeq[String](0)).toSeq
+    // wholeStage off alone still compiles expressions one by one;
+    // NO_CODEGEN makes the interpreted nullSafeEval run
+    val factoryMode = "spark.sql.codegen.factoryMode"
+    val prevMode = spark.conf.getOption(factoryMode)
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set(factoryMode, "NO_CODEGEN")
     try {
       val off = Seq("abab", "aabb").toDF("w")
         .select(subword_fold(split(col("w"), ""), merges).as("sym"))
         .collect().map(_.getSeq[String](0)).toSeq
       assert(on == off)
       assert(on == Seq(Seq("ab", "ab"), Seq("a", "ab", "b")))
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    } finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      prevMode.fold(spark.conf.unset(factoryMode))(
+        spark.conf.set(factoryMode, _))
+    }
+  }
+
+  test("a merge with an empty right symbol is rejected") {
+    intercept[IllegalArgumentException] {
+      subword_fold(split(lit("ab"), ""), Seq(("a", "", "a")))
+    }
   }
 }

@@ -7,9 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * settings. This is the production invariant the per-operator specs
   * pin individually (hash-seeded sampling, integer folds, grid
   * rounding): a query whose answer depends on the physical layout
-  * would pass its oracle on one cluster and drift on another. The same
-  * sweep checks that every query returns rows (`f_missing_and` is
-  * empty by design: a missing property under AND rejects all). Runs at
+  * would pass its oracle on one cluster and drift on another. Runs at
   * sf0.001; failures name the query.
   */
 class LayoutIndependenceSpec extends AnyFunSuite {
@@ -23,24 +21,20 @@ class LayoutIndependenceSpec extends AnyFunSuite {
 
   /** approx_percentile's GK-sketch merge is order-sensitive by design —
     * its contract is agreement with the exact tier (a_gate_agreement /
-    * the ≥97% spec), not bit-stability across layouts. It still runs
-    * once for the row check.
+    * the ≥97% spec), not bit-stability across layouts.
     */
   private val Excluded = Set("p_quality_gate_approx")
-  private val ExpectedEmpty = Set("f_missing_and")
 
   test("every registered query agrees across shuffle-partition settings") {
     val failures = scala.collection.mutable.ListBuffer.empty[String]
-    for (name <- SparkEntry.queries.keys.toSeq.sorted) {
+    val names = SparkEntry.queries.keys.toSeq.filterNot(Excluded).sorted
+    for (name <- names) {
       try {
         spark.conf.set("spark.sql.shuffle.partitions", "4")
         val a = canon(name)
-        if (a.isEmpty != ExpectedEmpty(name))
-          failures += s"$name (${if (a.isEmpty) "empty" else "non-empty"})"
-        if (!Excluded(name)) {
-          spark.conf.set("spark.sql.shuffle.partitions", "7")
-          if (a != canon(name)) failures += s"$name (results differ)"
-        }
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        val b = canon(name)
+        if (a != b) failures += s"$name (results differ)"
       } catch {
         case e: Throwable =>
           failures += s"$name (${e.getClass.getSimpleName})"
@@ -49,7 +43,6 @@ class LayoutIndependenceSpec extends AnyFunSuite {
       }
     }
     assert(failures.isEmpty,
-      s"layout-dependent or row-count failures:\n  " +
-        failures.mkString("\n  "))
+      s"layout-dependent queries:\n  ${failures.mkString("\n  ")}")
   }
 }

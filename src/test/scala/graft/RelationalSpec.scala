@@ -12,6 +12,17 @@ class RelationalSpec extends AnyFunSuite {
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
 
+  test("every registered query executes and most return rows at sf0.001") {
+    val counts = SparkEntry.queries.keys.map(n => n -> run(n).count()).toMap
+    // f_missing_and is empty BY DESIGN (missing property under AND rejects
+    // all); everything else must produce rows.
+    val expectedEmpty = Set("f_missing_and")
+    val unexpectedlyEmpty = counts.filter { case (n, c) =>
+      c == 0 && !expectedEmpty.contains(n) }
+    assert(unexpectedlyEmpty.isEmpty, s"empty results: $unexpectedlyEmpty")
+    assert(counts("f_missing_and") == 0)
+  }
+
   test("every query name has either an oracle or is documented rows-only") {
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     // Rows-only allowlist: genuinely non-SQL-expressible ops — approximate

@@ -1,7 +1,9 @@
 package graft.filters
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.GetStructField
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Compiles a [[FilterSpec]] into a Catalyst `Column` predicate tree.
@@ -10,19 +12,22 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * `ApplyPayloadFilters` (`Decisions.Kinesis/KinesisThreadJobs.cs:731-814`).
   * Instead of a per-record interpreter loop, the spec compiles once into a
   * declarative predicate that runs inside whole-stage codegen, with ONE
-  * full-body JSON parse per record ([[parse]]): a `from_json` whose schema
-  * is derived from the spec — a STRING field for each distinct first key
-  * of the filter properties, plus a corrupt-record field.
+  * `from_json` parse per record ([[parse]]) whose schema is derived from
+  * the spec: a STRING field for each distinct top-level property (a bare
+  * key, no `.` or `[`), plus a corrupt-record field.
   *
   * Semantics reproduced deliberately (SURVEY §2.3):
   *   - P4: a property is a `SelectToken` path, `name([n])*` segments
-  *     joined by `.` (grammar checked by [[FilterValidation]]). Its first
-  *     key is read from the parse; the rest of the path (`.type`, `[0]`,
-  *     `[2].id`) is read by `get_json_object` from that key's sub-document
-  *     only. Either way the value is a string, matching
+  *     joined by `.` (grammar checked by [[FilterValidation]]). A top-level
+  *     property is read from the parse; a nested one (`event.type`,
+  *     `ids[0]`, `a.items[2].id`) by `get_json_object` from the body.
+  *     Either way the value is a string, matching
   *     `JObject.SelectToken(...).ToString()` (`KinesisThreadJobs.cs:736,743`):
   *     a STRING field holds a string value's text and any other value's
-  *     compact JSON, exactly what `get_json_object` returns.
+  *     compact JSON, exactly what `get_json_object` returns. A STRING field
+  *     cannot tell a string from an object, so a nested path is not read
+  *     from its first key's field: `event.type` on `{"event":"{\"type\":
+  *     \"a\"}"}` would read `a`, where `SelectToken` finds nothing.
   *   - P5/S1: ALL comparisons are string comparisons, even
   *     Greater/Less Than — `string.Compare(..., Ordinal)`
   *     (`KinesisThreadJobs.cs:778-801`): `"9" > "1000"` is TRUE.
@@ -42,24 +47,22 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *     array, a bare scalar or string, `null`, a null body. Every declared
   *     field is a STRING, so no value can mismatch its type: the corrupt
   *     field is non-null exactly when the body is not an object, and a
-  *     JSON `null` or null body parses to a null struct. The parser options
-  *     are `get_json_object`'s: unquoted control characters are accepted,
+  *     null body parses to a null struct. The parser options are
+  *     `get_json_object`'s: unquoted control characters are accepted,
   *     `NaN` and leading-zero numbers are malformed.
   *   - P9: unknown verb ⇒ error at compile time
   *     (`KinesisThreadJobs.cs:802-804` logs + rejects per-record; we fail
   *     fast instead, which is strictly safer).
   *
-  * Two documents read differently from a whole-body `get_json_object`:
-  * a duplicate TOP-LEVEL key resolves to its last value (`from_json`),
-  * not its first; and a string value whose text is itself a JSON object
-  * is traversed by a nested path (`event.type` on `{"event":"{\"type\":
-  * \"a\"}"}` reads `a`), since a STRING field holds the decoded text.
+  * One document reads differently from a whole-body `get_json_object`: a
+  * duplicate top-level key resolves to its last value (`from_json`), not
+  * its first.
   */
 object FilterCompiler {
   import FilterVerbs._
 
   /** Parse field that is non-null exactly when the body is not a JSON
-    * object (see P8 above).
+    * object (see P8 above); the last field of every [[parse]].
     */
   private val CorruptField = "_graft_corrupt"
 
@@ -68,38 +71,40 @@ object FilterCompiler {
     "allowUnquotedControlChars", "true",
     "allowNonNumericNumbers", "false")
 
-  /** A property's first key and the rest of its path:
-    * `a.b[0]` → (`a`, `.b[0]`), `ids[0]` → (`ids`, `[0]`), `k` → (`k`, ``).
-    */
-  private def firstKey(property: String): (String, String) =
-    property.splitAt(property.indexWhere(c => c == '.' || c == '[') match {
-      case -1 => property.length
-      case i => i
-    })
+  private def isTopLevel(property: String): Boolean =
+    !property.exists(c => c == '.' || c == '[')
 
-  /** The ONE parse of `body` for `spec`: a STRING field per distinct first
-    * key of the spec's properties and of `keep` (further properties the
-    * caller reads from the same parse with [[extract]]), plus
-    * [[CorruptField]].
+  /** The keys [[parse]] declares for `spec`, in field order. */
+  private def keys(spec: FilterSpec): Seq[String] =
+    spec.filters.map(_.property).filter(isTopLevel).distinct
+
+  /** The ONE parse of `body` for `spec`: a STRING field per distinct
+    * top-level property of the spec, then [[CorruptField]].
     */
-  def parse(body: Column, spec: FilterSpec, keep: String*): Column = {
-    FilterValidation.requireValid(spec)
-    val keys = (spec.filters.map(_.property) ++ keep).map(firstKey(_)._1)
+  def parse(body: Column, spec: FilterSpec): Column =
     from_json(body,
-      StructType((keys :+ CorruptField).distinct
-        .map(StructField(_, StringType))),
+      StructType((keys(spec) :+ CorruptField).map(StructField(_, StringType))),
       ParseOptions)
-  }
 
-  /** P4: `property` as a string, from a [[parse]] that declared its first
-    * key; `get_json_object` reads the rest of the path from that key's
-    * sub-document.
+  /** Field `i` of a [[parse]], by position: two keys that differ only in
+    * case (`userId`, `UserId`) are different JSON keys, but a by-name
+    * lookup under case-insensitive resolution would find both.
     */
-  def extract(parsed: Column, property: String): Column = {
-    val (key, rest) = firstKey(property)
-    if (rest.isEmpty) parsed.getField(key)
-    else get_json_object(parsed.getField(key), "$" + rest)
-  }
+  private def field(parsed: Column, i: Int): Column =
+    Bridge.column(GetStructField(Bridge.expression(parsed), i))
+
+  /** P4: `property` as a string. A top-level property must be one of
+    * `spec`'s and is read from `parsed`, a [[parse]] for `spec`; a nested
+    * one is read by `get_json_object` from `body`.
+    */
+  def extract(spec: FilterSpec, body: Column, parsed: Column,
+      property: String): Column =
+    if (isTopLevel(property)) keys(spec).indexOf(property) match {
+      case -1 => throw new IllegalArgumentException(
+        s"Property '$property' is not declared by the parse for $spec")
+      case i => field(parsed, i)
+    }
+    else get_json_object(body, "$." + property)
 
   /** P5: one verb applied to an already-extracted string value. */
   def verbPredicate(extracted: Column, verb: String, value: String): Column = {
@@ -155,33 +160,36 @@ object FilterCompiler {
     }
   }
 
-  /** The delivery verdict of `spec` over a [[parse]] of the body — the
+  /** The delivery verdict of `spec` over `body` and its [[parse]] — the
     * form for callers that also [[extract]] from the same parse.
     */
-  def verdict(spec: FilterSpec, parsed: Column): Column =
-    compose(spec, parsed, verbPredicate)
+  def verdict(spec: FilterSpec, body: Column, parsed: Column): Column =
+    compose(spec, body, parsed, verbPredicate)
 
   /** The delivery predicate of `spec` over the JSON `body` column. */
   def compile(spec: FilterSpec, body: Column): Column =
-    verdict(spec, parse(body, spec))
+    compose(spec, body, parse(body, spec), verbPredicate)
 
   /** Typed twin of [[compile]]: same parse and composition, numeric verbs. */
   def compileTyped(spec: FilterSpec, body: Column): Column =
-    compose(spec, parse(body, spec), typedVerbPredicate)
+    compose(spec, body, parse(body, spec), typedVerbPredicate)
 
   /** The delivery-critical P6/P7/P8 composition in ONE place: per-filter
     * null ⇒ false (P7), AND/OR reduce (P6), non-objects delivered
     * unfiltered (P8), an empty spec delivers all.
     */
-  private def compose(spec: FilterSpec, parsed: Column,
+  private def compose(spec: FilterSpec, body: Column, parsed: => Column,
       verb: (Column, String, String) => Column): Column = {
+    // by-name `parsed`: an invalid spec fails here, before [[parse]] reads it
     FilterValidation.requireValid(spec)
     if (spec.filters.isEmpty) lit(true)
     else {
+      val p = parsed
       val preds = spec.filters.map(f => coalesce(
-        verb(extract(parsed, f.property), f.verb, f.value), lit(false)))
+        verb(extract(spec, body, p, f.property), f.verb, f.value),
+        lit(false)))
       val all = if (spec.useOr) preds.reduce(_ || _) else preds.reduce(_ && _)
-      val isObject = parsed.isNotNull && parsed.getField(CorruptField).isNull
+      val isObject = p.isNotNull && field(p, keys(spec).length).isNull
       when(isObject, all).otherwise(lit(true))
     }
   }

@@ -16,7 +16,8 @@ import graft.filters._
   * `KinesisThreadJobs.cs:743,778-801`), AND/OR composition (`:807-813`),
   * missing-property handling (`:736-741`), parse-failure pass-through
   * (`:694-714`). No query declares a parse schema: the compiler derives it
-  * from the spec, and a query that also projects a field names its key.
+  * from the spec, and a query that also projects a property reads it with
+  * the compiler's `extract`.
   */
 object FilterQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -30,15 +31,16 @@ object FilterQueries {
     (s, d) => events(s, d).filter(compile(spec, body))
       .select(col("event_id")).orderBy("event_id")
 
-  /** Spark side of a query on `props.$.k` that also projects `k`: the
-    * verdict and the projection read the same parse.
+  /** Spark side of a query whose `spec` filters on `props.$.k` and that
+    * also projects `k`: the verdict and the projection read the same parse.
     */
   private def onK(spec: FilterSpec): Q = (s, d) => {
-    val parsed = col("parsed")
+    val (body, parsed) = (col("props"), col("parsed"))
     events(s, d)
-      .withColumn("parsed", FilterCompiler.parse(col("props"), spec, "k"))
-      .filter(FilterCompiler.verdict(spec, parsed))
-      .select(col("event_id"), FilterCompiler.extract(parsed, "k").as("k"))
+      .withColumn("parsed", FilterCompiler.parse(body, spec))
+      .filter(FilterCompiler.verdict(spec, body, parsed))
+      .select(col("event_id"),
+        FilterCompiler.extract(spec, body, parsed, "k").as("k"))
       .orderBy("event_id")
   }
 
@@ -149,20 +151,20 @@ object FilterQueries {
     // ---- empty filter list: everything delivered (TJ:694 guard) ----
     "f_empty_spec" -> passing(FilterSpec(Nil, useOr = true)),
     // ---- JSON array paths: SelectToken supports indexing ("items[0].id");
-    // the filter and both projections read one parse ----
+    // the filter and both projections read paths the same way ----
     "f_array_path" -> { (s, d) =>
-      val body = concat(lit("{\"ids\":[\""), col("event_type"),
-        lit("\",\"backup\"],\"ks\":["),
-        get_json_object(col("props"), "$.k"), lit(",5]}"))
       val spec = FilterSpec(Seq(
         PayloadFilter("ids[0]", FilterVerbs.Equals, "purchase")))
-      val parsed = col("parsed")
+      val (body, parsed) = (col("body"), col("parsed"))
       events(s, d)
-        .withColumn("parsed", FilterCompiler.parse(body, spec, "ks"))
-        .filter(FilterCompiler.verdict(spec, parsed))
+        .withColumn("body", concat(lit("{\"ids\":[\""), col("event_type"),
+          lit("\",\"backup\"],\"ks\":["),
+          get_json_object(col("props"), "$.k"), lit(",5]}")))
+        .withColumn("parsed", FilterCompiler.parse(body, spec))
+        .filter(FilterCompiler.verdict(spec, body, parsed))
         .select(col("event_id"),
-          FilterCompiler.extract(parsed, "ks[0]").as("k0"),
-          FilterCompiler.extract(parsed, "ids[1]").as("backup"))
+          FilterCompiler.extract(spec, body, parsed, "ks[0]").as("k0"),
+          FilterCompiler.extract(spec, body, parsed, "ids[1]").as("backup"))
         .orderBy("event_id")
     },
     // ---- metadata/data projections (P1-P3, KinesisUtils.cs:146-183) ----

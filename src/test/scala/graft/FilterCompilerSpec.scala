@@ -256,12 +256,22 @@ class FilterCompilerSpec extends AnyFunSuite {
     Row("""{"k":1.50,"o":{"a" : 1}}""", and(f("k", "Equals", "1.5"),
       f("o", "Equals", "{\"a\":1}")), true),               // compact forms
     Row("""{"e":{"t":"a","t":"b"}}""", and(f("e.t", "Equals", "a")), true),
-    // the two verdicts that differ from a whole-body get_json_object:
-    // a duplicate top-level key reads its LAST value, and a string whose
-    // text is a JSON object is traversed by a nested path
-    Row("""{"k":"a","k":"b"}""", and(f("k", "Equals", "b")), true),
+    Row("""{"e":{"t":"a","t":"b"}}""", and(f("e.t", "Equals", "b")), false),
+    // keys that differ only in case are different keys, in one spec too
+    Row("""{"k":"a","K":"b"}""", and(f("k", "Equals", "a"),
+      f("K", "Equals", "b")), true),
+    Row("""{"k":"a","K":"b"}""", or(f("k", "Equals", "b"),
+      f("K", "Equals", "a")), false),
+    // a string whose text is a JSON object is a string: a path through it
+    // is missing (P7), as for any other string
     Row("""{"event":"{\"type\":\"refund\"}"}""",
-      and(f("event.type", "Equals", "refund")), true),
+      and(f("event.type", "Equals", "refund")), false),
+    Row("""{"event":"{\"type\":\"click\"}"}""", eventNot, false),
+    Row("""{"ids":"[\"purchase\"]"}""", and(f("ids[0]", "Equals", "purchase")),
+      false),
+    // the one verdict that differs from a whole-body get_json_object: a
+    // duplicate top-level key reads its LAST value
+    Row("""{"k":"a","k":"b"}""", and(f("k", "Equals", "b")), true),
     // typed extension: numeric verbs, same P7/P8
     Row(doc, and(f("n", "Greater Than", "100")), false, typed = true),
     Row("""{"n":"9"}""", and(f("n", "Less Than or Equal", "42")), true,

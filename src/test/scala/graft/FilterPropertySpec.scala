@@ -11,8 +11,8 @@ import graft.filters.{FilterCompiler, FilterSpec, FilterVerbs, PayloadFilter}
   * (document, spec) pairs — ordinal string comparisons, case-insensitive
   * variants, missing-property non-match, AND/OR composition, and
   * non-object/malformed pass-through, and a nested path whose
-  * intermediate key holds an object in some docs and a string or an
-  * array in others (missing, P7). 60 random specs × 48 random docs
+  * intermediate key holds an object in some docs and a string (plain, or
+  * an object's JSON text) or an array in others (missing, P7). 60 random specs × 48 random docs
   * evaluate as ONE Spark job (each spec compiled as a column), so the
   * 2,880-cell matrix costs a single collect.
   */
@@ -43,6 +43,10 @@ class FilterPropertySpec extends AnyFunSuite {
   private case class Arr(items: Seq[String]) extends Value {
     def render: String = items.map(Str(_).render).mkString("[", ",", "]")
   }
+  /** A string whose text is a JSON object: still a string to a path. */
+  private case class ObjText(o: Obj) extends Value {
+    def render: String = "\"" + o.render.replace("\"", "\\\"") + "\""
+  }
 
   /** A doc is either a known object or a non-object/malformed body. */
   private sealed trait Doc { def render: String }
@@ -55,15 +59,18 @@ class FilterPropertySpec extends AnyFunSuite {
   }
 
   /** An object doc: a random subset of the flat keys, and `o` absent or
-    * holding a string, an array, or an object with some of `p`, `q`.
+    * holding a string, an array, an object with some of `p`, `q`, or such
+    * an object's JSON text as a string.
     */
   private def randObj(value: () => String): ObjDoc = {
-    val o: Seq[(String, Value)] = rnd.nextInt(4) match {
+    def obj = Obj(Seq("p", "q").filter(_ => rnd.nextBoolean())
+      .map(_ -> value()).toMap)
+    val o: Seq[(String, Value)] = rnd.nextInt(5) match {
       case 0 => Nil
       case 1 => Seq("o" -> Str(value()))
       case 2 => Seq("o" -> Arr(Seq(value())))
-      case _ => Seq("o" -> Obj(Seq("p", "q").filter(_ => rnd.nextBoolean())
-        .map(_ -> value()).toMap))
+      case 3 => Seq("o" -> ObjText(obj))
+      case _ => Seq("o" -> obj)
     }
     ObjDoc((keys.filter(_ => rnd.nextBoolean())
       .map(k => k -> (Str(value()): Value)) ++ o).toMap)

@@ -12,9 +12,9 @@ import graft.filters.{FilterCompiler, FilterSpec, FilterVerbs, PayloadFilter}
   * variants, missing-property non-match, AND/OR composition, and
   * non-object/malformed pass-through, and a nested path whose
   * intermediate key holds an object in some docs and a string (plain, or
-  * an object's JSON text) or an array in others (missing, P7). 60 random specs × 48 random docs
-  * evaluate as ONE Spark job (each spec compiled as a column), so the
-  * 2,880-cell matrix costs a single collect.
+  * an object's JSON text) or an array in others (missing, P7). 60 random
+  * specs × 48 random docs evaluate as ONE Spark job (each spec compiled
+  * as a column), so the 2,880-cell matrix costs a single collect.
   */
 class FilterPropertySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.get
